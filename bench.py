@@ -239,56 +239,50 @@ def annex_names() -> list[str]:
 STREAMING_SINGLE_RUN = {"q_stream_stream_left_join", "q_stream_psi_monitor"}
 
 
+# The bench replay profile, shared by scripts/sweep_noop.py and
+# scripts/isolate_bench.py so every timing tool measures the same
+# replay. A streaming drain's cost is microbatch COUNT x a fixed
+# scheduling cost, not data volume, so each family's drop dir is
+# folded to 2 files at mFPT 3 (KNN's 4-file feed at mFPT 4: one
+# batch) — every fold is sound for its family (the comments at each
+# query's replay() call) and CI pins each folded cadence against the
+# oracle. Few-key state gets 2 state partitions, the honest sizing for
+# a few MB of state; the many-key families (COUNTS, SEQ, DEDUP) keep
+# their own sizing. Parity tests run the query defaults.
+REPLAY_PROFILE = {
+    "HLA_STREAM_JOIN_DROP_FILES": "2",
+    "HLA_STREAM_JOIN_MFPT": "3",
+    "HLA_STREAM_PSI_DROP_FILES": "2",
+    "HLA_STREAM_STATE_PARTITIONS": "2",
+    "HLA_STREAM_DEDUP_DROP_FILES": "2",
+    "HLA_STREAM_DEDUP_MFPT": "3",
+    "HLA_STREAM_KNN_MFPT": "4",
+    "HLA_STREAM_SEQ_DROP_FILES": "2",
+    "HLA_STREAM_SEQ_MFPT": "3",
+    "HLA_STREAM_COUNTS_DROP_FILES": "2",
+    "HLA_STREAM_COUNTS_MFPT": "3",
+    "HLA_STREAM_T5_DEDUP_DROP_FILES": "2",
+    "HLA_STREAM_T5_DEDUP_MFPT": "3",
+    "HLA_STREAM_COMPLETE_DROP_FILES": "2",
+    "HLA_STREAM_COMPLETE_MFPT": "3",
+    "HLA_STREAM_HH_DROP_FILES": "2",
+    "HLA_STREAM_HH_MFPT": "3",
+}
+
+
+def apply_replay_profile() -> None:
+    """Set REPLAY_PROFILE for every name the caller has not set."""
+    for name, value in REPLAY_PROFILE.items():
+        os.environ.setdefault(name, value)
+
+
 def _sf_of(sf_dir: str) -> float:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     return float(m.group(1)) if m else -1.0
 
 
 def main() -> None:
-    # The stream-stream join's cost is microbatch COUNT x fixed ~1.3 s
-    # scheduling, not data volume (VERDICT r4 item 7): replay 2 larger
-    # drop files instead of 8 so the bench row measures the join, not
-    # 24 scheduler round-trips. The parity tests keep the default 8 —
-    # the drained result is identical either way (stream-batch parity
-    # law), which tests/test_streaming.py continues to pin.
-    os.environ.setdefault("HLA_STREAM_JOIN_DROP_FILES", "2")
-    # r9 drain fold (VERDICT r8 item 5): maxFilesPerTrigger=3 packs the
-    # 2-data-file + 3-sentinel replay into TWO microbatches —
-    # [d1,d2,s1],[s2,s3] — instead of five. Correctness needs only
-    # SOME batch to run after a batch that saw a sentinel (watermark
-    # from batch N binds in batch N+1); with mFPT=3 and 2 data files
-    # the last two sentinels can never share the final data batch, so
-    # the flush batch is guaranteed. Hash parity vs the DuckDB oracle
-    # re-verified at sf0.1 (3/3 runs, both mFPT=1 and 3); the parity
-    # tests keep mFPT=1 so the finest batch cadence stays exercised.
-    # Measured: join drain 5.5 -> 3.1 s median.
-    os.environ.setdefault("HLA_STREAM_JOIN_MFPT", "3")
-    # r8 drain-cost pass (VERDICT r7 item 4): the two remaining levers
-    # on the ~10.3 s streaming fixed cost. PSI's complete-mode agg has
-    # no watermark, so its drained result is batching-invariant — 2
-    # larger files collapse its 4 microbatches to 1 (3.5 -> 1.3 s).
-    # State-store TASK COUNT was still 8 per microbatch; the bench's
-    # state volume is a few MB, so 2 state partitions is the honest
-    # production sizing (join 7.0 -> 4.4 s; 5-microbatch floor stands:
-    # 2 data files + 3 watermark sentinels, maxFilesPerTrigger=1).
-    # Parity at THIS config re-verified vs the DuckDB oracle at sf0.1;
-    # parity tests keep the 8-file/8-partition defaults.
-    os.environ.setdefault("HLA_STREAM_PSI_DROP_FILES", "2")
-    os.environ.setdefault("HLA_STREAM_STATE_PARTITIONS", "2")
-    # r14: the streaming dedup's annex rows use the same folded replay
-    # as the joins (its result is replay-invariant, greedy-parity test
-    # pins the folded config; its state tasks self-size via its own
-    # HLA_STREAM_DEDUP_STATE_PARTITIONS default — the many-key regime
-    # must NOT inherit the 2-partition few-key sizing above, see
-    # BASELINE r14 addendum 2: 2 parts 96 s vs 16 parts 12.6 s).
-    os.environ.setdefault("HLA_STREAM_DEDUP_DROP_FILES", "2")
-    os.environ.setdefault("HLA_STREAM_DEDUP_MFPT", "3")
-    # r14: the stream-knn pair (annex rows when the rotation wraps) is
-    # STATELESS retrieval — the drain is microbatch count x foreachBatch
-    # fixed cost and the result is batch-boundary invariant (CI-pinned
-    # at two mFPT widths). Fold the 4-file feed into one batch for the
-    # bench row; parity tests keep the 1-file cadence.
-    os.environ.setdefault("HLA_STREAM_KNN_MFPT", "4")
+    apply_replay_profile()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     registry = load_registry()
     spark = get_spark(app_name="hla-bench")

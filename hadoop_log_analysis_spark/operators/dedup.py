@@ -539,7 +539,7 @@ def set_similarity_join(
       once, so the final ``dropDuplicates`` disappears: at sf0.1 that
       aggregate consumed ~80M qualifying-occurrence rows to produce
       8.9M pairs and dominated the runtime (measured 13.2 → 2.4 s
-      med-of-3, scripts/probe_setsim2.py). The array path keeps the
+      med-of-3). The array path keeps the
       dedup (no mask to take a least bit of).
 
     Construction runs two eager corpus passes plus a 1-row vocab probe

@@ -28,9 +28,11 @@ from hadoop_log_analysis_spark.queries import query
 from hadoop_log_analysis_spark.sources.catalog import scan
 from hadoop_log_analysis_spark.streaming.events_stream import (
     TMP,
+    Replay,
     derive_drop_dir,
+    drain,
     read_events_stream,
-    run_foreach_batch_to_parquet,
+    replay,
     run_to_table,
 )
 from hadoop_log_analysis_spark.streaming.skew import (
@@ -41,7 +43,7 @@ from hadoop_log_analysis_spark.streaming.skew import (
 
 # Sink-table names shared with measurement tooling
 # (scripts/stream_state_skew.py derives checkpoint paths from these
-# via events_stream.ckpt_path — ADVICE r12: no hard-coded convention).
+# via events_stream.ckpt_path — no hard-coded convention).
 T8_LEFT_TABLE = "t8_stream_left_join"
 T8_LEFT_BKT_TABLE = "t8_stream_left_join_bkt"
 T8_LEFT_BKT_PAYLOAD_TABLE = "t8_stream_left_join_bkt_pl"
@@ -65,29 +67,14 @@ def _us(col):
     return F.unix_micros(col)
 
 
-def _complete_mode_replay() -> tuple[int, int]:
-    """r14 OPTIMIZATION: shared replay-fold knobs for the COMPLETE-mode,
-    no-watermark drains (q_stream_hourly_errors, q_stream_sliding_counts,
-    q_stream_sessions, q_stream_ohlc). Complete mode re-emits the full
-    aggregate each batch and holds no watermark, so the drained result
-    is a pure function of the total replayed data — batching-invariant
-    by the same law the r8 PSI fold used ("complete-mode agg has no
-    watermark, its drained result is batching-invariant"). Defaults =
-    the 8-file/mFPT=2 cadence these four queries ran at for every round
-    before the knobs existed (read_events_stream's historical default —
-    ADVICE r14 low: the r14 knob landed with mFPT=1, silently doubling
-    the default microbatch count from 4 to 8); measurement configs
-    fold further via the envs, and the CI parity test pins the default
-    AND folded cadences. Loud validation per the repo's env-knob
-    discipline."""
-    n_files = int(os.environ.get("HLA_STREAM_COMPLETE_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_COMPLETE_MFPT", "2"))
-    if n_files < 1 or mfpt < 1:
-        raise ValueError(
-            "HLA_STREAM_COMPLETE_DROP_FILES/_MFPT must be >= 1, "
-            f"got {n_files}/{mfpt}"
-        )
-    return n_files, mfpt
+def _complete_mode_replay() -> Replay:
+    """Replay of the COMPLETE-mode, no-watermark drains
+    (q_stream_hourly_errors, q_stream_sliding_counts, q_stream_sessions,
+    q_stream_ohlc): 8 files, 2 per microbatch. Folding is sound: complete
+    mode re-emits the full aggregate each batch and holds no watermark,
+    so the drained result is a pure function of the total replayed
+    data. The CI parity test pins the default AND a folded cadence."""
+    return replay("COMPLETE", files=8, mfpt=2)
 
 
 @query(
@@ -104,9 +91,9 @@ def _complete_mode_replay() -> tuple[int, int]:
 def q_stream_hourly_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7+T1: tumbling 1-hour window over the error stream, complete
     mode (all windows retained -> deterministic == batch answer)."""
-    n_files, mfpt = _complete_mode_replay()
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files)
-    events = read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+    r = _complete_mode_replay()
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
+    events = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
     agg = (
         events.filter(F.col("event_type") == "error")
         .groupBy(F.window("ts", "1 hour").alias("w"))
@@ -132,9 +119,9 @@ def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2: sliding window (1 h width / 15 min slide) event counts,
     complete mode. Each event lands in 4 overlapping windows; the
     oracle enumerates the same 4 window starts per event."""
-    n_files, mfpt = _complete_mode_replay()
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files)
-    events = read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+    r = _complete_mode_replay()
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
+    events = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
     agg = (
         events.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
         .agg(F.count("*").alias("n"))
@@ -171,9 +158,9 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming twin of batch W6 sessionization, and the oracle IS the
     batch formulation (lag -> break -> running sum -> agg). Spark's
     session_window end = last event + gap, mirrored as +1800000000 µs."""
-    n_files, mfpt = _complete_mode_replay()
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files)
-    events = read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+    r = _complete_mode_replay()
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
+    events = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
     agg = (
         events.groupBy(
             F.session_window("ts", "30 minutes").alias("w"), "user_id"
@@ -228,25 +215,16 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (each dup shares its original's event time, so it always lands
     within the watermark). The deduped stream must equal the original
     events table — a full SQL oracle on per-type counts."""
-    # r14 OPTIMIZATION: replay-fold knobs (default = the parity-tested
-    # 8-file/mFPT=1 cadence). Folding is sound for THIS op: every
-    # injected duplicate shares its original's event time and sits in
-    # the same time-ordered file slice, so fewer/bigger batches only
-    # make the watermark advance LESS between original and duplicate —
-    # strictly safer for dropDuplicatesWithinWatermark's window — and
-    # deduped rows append in their own batch, so the drained set is
-    # the unique rows under every cadence. Oracle hash parity
-    # re-verified at three cadences (8/1, 2/3, 3/2) + pinned in CI;
-    # measured sf0.1 med-of-3: 3.77 s default -> 1.71 s folded.
-    n_files = int(os.environ.get("HLA_STREAM_T5_DEDUP_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_T5_DEDUP_MFPT", "1"))
-    if n_files < 1 or mfpt < 1:
-        raise ValueError(
-            "HLA_STREAM_T5_DEDUP_DROP_FILES/_MFPT must be >= 1, "
-            f"got {n_files}/{mfpt}"
-        )
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files, with_dups=True)
-    events = read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+    # Folding the replay is sound for THIS op: every injected duplicate
+    # shares its original's event time and sits in the same
+    # time-ordered file slice, so fewer/bigger batches only make the
+    # watermark advance LESS between original and duplicate — strictly
+    # safer for dropDuplicatesWithinWatermark's window — and deduped
+    # rows append in their own batch, so the drained set is the unique
+    # rows under every cadence (CI pins a folded cadence).
+    r = replay("T5_DEDUP", files=8, mfpt=1)
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files, with_dups=True)
+    events = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
     deduped = events.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
@@ -301,31 +279,17 @@ def q_stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     this documented fallback remains the T6 implementation."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    # r14 OPTIMIZATION (guide §1.2 step 2 / the q_stream_minhash_dedup
-    # sizing law): this drain's cost is per-GROUP Python stateful-
-    # runner overhead — every user present in a batch is one Python
-    # call — which parallelizes with state-task count and shrinks
-    # with batch count (each user re-emits per batch). Replay knobs
-    # (default = the parity-tested 8-file/mFPT=1 cadence) follow the
-    # stream-stream join's pattern; the drained answer is
-    # max(running count) per user = the final total, so it is
-    # batching- AND partition-count-invariant (driver hash parity is
-    # the oracle; re-verified at 4 replay/partition configs incl. 1-
-    # and 2-batch folds). Measured at sf0.1, med-of-3: 12.1 s (8
-    # batches x 8 state tasks) -> 9.7 s (default replay, 32 tasks)
-    # -> 1.7 s (folded replay via the envs, 32 tasks).
-    n_files = int(os.environ.get("HLA_STREAM_COUNTS_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_COUNTS_MFPT", "1"))
-    state_parts = int(
-        os.environ.get("HLA_STREAM_COUNTS_STATE_PARTITIONS", "32")
-    )
-    if n_files < 1 or mfpt < 1 or state_parts < 1:
-        raise ValueError(
-            "HLA_STREAM_COUNTS_DROP_FILES/_MFPT/_STATE_PARTITIONS must "
-            f"be >= 1, got {n_files}/{mfpt}/{state_parts}"
-        )
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files)
-    events = read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+    # This drain's cost is per-GROUP Python stateful-runner overhead —
+    # every user present in a batch is one Python call — which
+    # parallelizes with state-task count (hence the family's own 32
+    # state partitions) and shrinks with batch count (each user
+    # re-emits per batch). The drained answer is max(running count)
+    # per user = the final total, so it is batching- AND
+    # partition-count-invariant (DuckDB-oracle hash parity; CI pins a
+    # folded cadence).
+    r = replay("COUNTS", files=8, mfpt=1, state_partitions=32)
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
+    events = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
     updates = events.groupBy("user_id").applyInPandasWithState(
         _count_state_fn,
         outputStructType=_T6_OUT_SCHEMA,
@@ -334,7 +298,7 @@ def q_stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     out = run_to_table(
-        updates, "t6_stateful", "update", state_partitions=state_parts
+        updates, "t6_stateful", "update", state_partitions=r.state_partitions
     )
     return (
         out.groupBy("user_id").agg(F.max("n_so_far").alias("n")).orderBy("user_id")
@@ -357,14 +321,25 @@ def q_stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch_id-keyed, event_type-partitioned parquet directory
     (at-least-once delivery made effectively-once by the idempotent
     batchId overwrite), then read back and aggregated; must equal the
-    batch table (SQL oracle)."""
+    batch table (SQL oracle). foreachBatch is the production fan-out
+    sink: each microbatch is a batch DataFrame written with the full
+    batch writer (partitioning, dynamic overwrite, multiple sinks)."""
+    import shutil
+
     tag = os.path.basename(os.path.normpath(sf_dir))
     out_dir = os.path.join(
         TMP, f"stream_sink_{tag}_{spark.sparkContext.applicationId}"
     )
+    shutil.rmtree(out_dir, ignore_errors=True)
     drop = derive_drop_dir(spark, sf_dir)
     events = read_events_stream(spark, drop)
-    run_foreach_batch_to_parquet(events, f"t7_sink_{tag}", out_dir)
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("overwrite").partitionBy("event_type").parquet(
+            os.path.join(out_dir, f"batch_id={batch_id}")
+        )
+
+    drain(events, f"t7_sink_{tag}", foreach_batch=write_batch)
     # explicit schema (stream schema + the batch_id partition dir):
     # a drained stream with zero batches reads back as empty, not as
     # an inference failure — quiet days are normal at scale.
@@ -406,18 +381,16 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits exactly the batch join's matches — a full-hash oracle, the
     strongest check a streaming op can carry.
 
-    r13: honors the same HLA_STREAM_JOIN_DROP_FILES / _MFPT replay
-    envs as the left-outer pair (the result is replay-granularity
-    invariant — that IS the parity law — and inner joins need no
-    sentinel flush: matches emit when both rows are present, so
-    folding the replay is always safe); measurement tooling can now
-    compare all four stream-stream joins at one replay config.
+    Replays as the JOIN family (shared with the left-outer joins, so
+    all stream-stream joins compare at one replay config). Folding is
+    always safe for an inner join: the result is replay-granularity
+    invariant — that IS the parity law — and no sentinel flush is
+    needed, since matches emit when both rows are present.
     """
-    n_files = int(os.environ.get("HLA_STREAM_JOIN_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_JOIN_MFPT", "2"))
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files)
+    r = replay("JOIN", files=8, mfpt=2)
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
     clicks = (
-        read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
         .filter(F.col("event_type") == "click")
         .withWatermark("ts", "2 hours")
         .select(
@@ -427,7 +400,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     purchases = (
-        read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
         .filter(F.col("event_type") == "purchase")
         .withWatermark("ts", "2 hours")
         .select(
@@ -474,14 +447,12 @@ def q_stream_stream_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
     equi-match it (no duplicate pairs), and nothing waits for an
     eviction-time flush — the defense is a pure streaming plan end to
     end. Oracle byte-identical to q_stream_stream_join's (output-
-    invisibility, driver-hash-enforced). Honors the shared
-    HLA_STREAM_JOIN_DROP_FILES / _MFPT replay envs (r13, see
-    q_stream_stream_join)."""
-    n_files = int(os.environ.get("HLA_STREAM_JOIN_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_JOIN_MFPT", "2"))
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files)
+    invisibility, hash-enforced by the oracle). Replays as the JOIN family
+    (see q_stream_stream_join)."""
+    r = replay("JOIN", files=8, mfpt=2)
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
     clicks = (
-        read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -490,7 +461,7 @@ def q_stream_stream_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
         )
     )
     purchases = (
-        read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -544,44 +515,29 @@ def q_stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     app = spark.sparkContext.applicationId
     stage = os.path.join(TMP, f"recovery_stage_{tag}_{app}")
     out = os.path.join(TMP, f"recovery_out_{tag}_{app}")
-    ckpt = os.path.join(TMP, f"stream_ckpt_recovery_{tag}_{app}")
-    for p in (stage, out, ckpt):
+    for p in (stage, out):
         shutil.rmtree(p, ignore_errors=True)
     os.makedirs(stage)
     files = sorted(glob.glob(os.path.join(drop, "part-*.json")))
 
-    def drain_once() -> None:
-        events = read_events_stream(spark, stage, max_files_per_trigger=1)
-
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            # batchId-keyed overwrite = idempotent under at-least-once
-            # replay; the directory doubles as a partition column on read.
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(out, f"batch_id={batch_id}")
-            )
-
-        q = (
-            events.writeStream.foreachBatch(write_batch)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # batchId-keyed overwrite = idempotent under at-least-once
+        # replay; the directory doubles as a partition column on read.
+        batch_df.write.mode("overwrite").parquet(
+            os.path.join(out, f"batch_id={batch_id}")
         )
-        finished = q.awaitTermination(300)
-        if not finished:
-            q.stop()
-            raise RuntimeError(
-                "checkpoint-recovery drain did not finish within 300s; "
-                "sink would be partial"
-            )
 
     half = len(files) // 2
-    for f in files[:half]:
-        shutil.copy(f, stage)
-    drain_once()
-    for f in files[half:]:
-        shutil.copy(f, stage)
-    drain_once()  # same checkpoint: resumes, processes ONLY the new files
+    for phase, arrived in enumerate((files[:half], files[half:])):
+        for f in arrived:
+            shutil.copy(f, stage)
+        # phase 1 resumes phase 0's checkpoint: only the new files run
+        drain(
+            read_events_stream(spark, stage, max_files_per_trigger=1),
+            f"recovery_{tag}",
+            foreach_batch=write_batch,
+            resume=phase == 1,
+        )
     return (
         spark.read.parquet(out)
         .groupBy("event_type")
@@ -666,31 +622,23 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle) — the stream-batch parity law applied to outer-join
     semantics.
 
-    Wall-time is ~N_microbatches x ~1.3 s FIXED scheduling cost, not
-    data volume (VERDICT r4 plan audit) — the same overhead amortizes
-    over multi-GB batches on a cluster. HLA_STREAM_JOIN_DROP_FILES
-    (default 8) sets the replay granularity: the bench uses 2 larger
-    files to cut the local drain from ~24 to ~7 microbatches, the
-    parity tests keep 8 so batch boundaries stay exercised. The
-    drained result is identical either way (it must hash-match the
-    batch join regardless of how the feed is sliced — that IS the
-    parity law). HLA_STREAM_JOIN_MFPT (default 1) sets
-    maxFilesPerTrigger: the parity tests keep 1 so every file is its
-    own microbatch and the 3-sentinel watermark cadence
-    (derive_drop_dir) is exercised at its finest granularity; the
-    bench uses 3, folding the 2-data-file replay to TWO microbatches
-    ([d1,d2,s1],[s2,s3]) — correctness only needs SOME batch to
-    execute after a batch that saw a sentinel (watermark from batch N
-    binds in batch N+1), and with 2 data files at mFPT=3 the last two
-    sentinels can never share the final data batch, so the flush
-    batch is guaranteed. Hash parity vs the DuckDB oracle re-verified
-    at sf0.1 for mFPT 1, 2, and 3 (3 runs each).
+    Wall-time is ~N_microbatches x a FIXED scheduling cost, not data
+    volume — the same overhead amortizes over multi-GB batches on a
+    cluster. The JOIN family's replay defaults to 8 files, 1 per
+    microbatch, so every file is its own microbatch and the 3-sentinel
+    watermark cadence (derive_drop_dir) is exercised at its finest
+    granularity. The drained result is identical under any slicing of
+    the feed (that IS the parity law), with one condition on the fold:
+    SOME batch must execute after a batch that saw a sentinel
+    (watermark from batch N binds in batch N+1). At 2 data files and
+    mFPT=3 the replay is TWO microbatches ([d1,d2,s1],[s2,s3]) and the
+    last two sentinels can never share the final data batch, so the
+    flush batch is guaranteed (CI pins that folded cadence).
     """
-    n_files = int(os.environ.get("HLA_STREAM_JOIN_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_JOIN_MFPT", "1"))
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files, with_sentinel=True)
+    r = replay("JOIN", files=8, mfpt=1)
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files, with_sentinel=True)
     clicks = (
-        read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
         .withWatermark("ts", "2 hours")
         .filter(F.col("event_type").isin("click", "__sentinel"))
         .select(
@@ -700,7 +648,7 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     purchases = (
-        read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
         .withWatermark("ts", "2 hours")
         .filter(F.col("event_type").isin("purchase", "__sentinel"))
         .select(
@@ -763,11 +711,10 @@ def q_stream_stream_left_join_bucketed(
     merge; user_id=-1 never equi-matches). State-spread effect is
     measured by scripts/stream_state_skew.py (plain vs bucketed).
     """
-    n_files = int(os.environ.get("HLA_STREAM_JOIN_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_JOIN_MFPT", "1"))
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files, with_sentinel=True)
+    r = replay("JOIN", files=8, mfpt=1)
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files, with_sentinel=True)
     clicks = (
-        read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
         .filter(F.col("event_type").isin("click", "__sentinel"))
         .select(
             F.col("event_id").alias("click_id"),
@@ -776,7 +723,7 @@ def q_stream_stream_left_join_bucketed(
         )
     )
     purchases = (
-        read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
         .filter(F.col("event_type").isin("purchase", "__sentinel"))
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -831,11 +778,10 @@ def q_stream_stream_left_join_bucketed_payload(
     multiset-exact in the unit sweep (tests/test_properties.py
     ``test_merge_bucketed_left_carries_payload_cols``). Time crosses
     the engine boundary as epoch-µs (module docstring)."""
-    n_files = int(os.environ.get("HLA_STREAM_JOIN_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_JOIN_MFPT", "1"))
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files, with_sentinel=True)
+    r = replay("JOIN", files=8, mfpt=1)
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files, with_sentinel=True)
     clicks = (
-        read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
         .filter(F.col("event_type").isin("click", "__sentinel"))
         .select(
             F.col("event_id").alias("click_id"),
@@ -844,7 +790,7 @@ def q_stream_stream_left_join_bucketed_payload(
         )
     )
     purchases = (
-        read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
         .filter(F.col("event_type").isin("purchase", "__sentinel"))
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -948,25 +894,16 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     does vectorized value_counts + an O(k log k) merge, and the exact
     recount runs only when a report is cut.
     """
-    # r14 OPTIMIZATION: replay-fold knobs (defaults = the parity
-    # cadence). Folding is sound DESPITE Misra-Gries emissions being
+    # Folding the replay is sound DESPITE Misra-Gries emissions being
     # cadence-dependent: the final answer is the exact recount
     # thresholded at n/(k+1), so extra candidates any cadence emits
     # are filtered out, and every TRUE heavy hitter (shard freq >
     # shard_n/(k+1) since an item's whole stream hits one shard) is
     # in the final MG state — hence in the drained union — under
-    # EVERY batching. Oracle hash parity re-verified at both
-    # cadences + pinned in CI. Measured sf0.1 med-of-3:
-    # 6.09 s default -> 2.02 s folded.
-    n_files = int(os.environ.get("HLA_STREAM_HH_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_HH_MFPT", "1"))
-    if n_files < 1 or mfpt < 1:
-        raise ValueError(
-            f"HLA_STREAM_HH_DROP_FILES/_MFPT must be >= 1, "
-            f"got {n_files}/{mfpt}"
-        )
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files)
-    ev = read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+    # EVERY batching (CI pins a folded cadence).
+    r = replay("HH", files=8, mfpt=1)
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
+    ev = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
     sharded = ev.select(
         F.col("event_type").alias("item"),
         F.pmod(F.xxhash64("event_type"), F.lit(8)).alias("shard"),
@@ -1106,11 +1043,6 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shutil.rmtree(state_root, ignore_errors=True)
     os.makedirs(state_root, exist_ok=True)
-    ckpt = os.path.join(
-        TMP,
-        f"stream_ckpt_cdc_apply_{tag}_{spark.sparkContext.applicationId}",
-    )
-    shutil.rmtree(ckpt, ignore_errors=True)
 
     drop = derive_drop_dir(spark, sf_dir)
     events = read_events_stream(spark, drop)
@@ -1159,16 +1091,7 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         _us(F.col("ts")).alias("ts_us"),
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("cdc apply stream did not drain in 300s")
+    drain(stream, f"cdc_apply_{tag}", foreach_batch=apply_batch)
 
     versions = _latest_versions()
     if not versions:  # zero-batch drain (empty fixture) -> empty result
@@ -1219,17 +1142,17 @@ def q_stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # Complete-mode agg with no watermark: the drained result is
-    # batching-invariant, so the bench replays fewer/larger files to
-    # cut the fixed per-microbatch cost (HLA_STREAM_PSI_DROP_FILES=2
-    # -> 1 microbatch); parity tests keep the 8-file default where
-    # incremental state updates are the point.
-    n_files = int(os.environ.get("HLA_STREAM_PSI_DROP_FILES", "8"))
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files)
+    # batching-invariant, so folding the replay into fewer/larger files
+    # only cuts the fixed per-microbatch cost.
+    r = replay("PSI", files=8, mfpt=2)
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
     ev = scan(spark, sf_dir, "events")
     b = _psi_reference(ev).localCheckpoint(eager=True)  # snapshot once
     cut = F.lit(_PSI_CUT).cast("timestamp")
-    stream = read_events_stream(spark, drop).filter(F.col("ts") >= cut).select(
-        "event_type", "value"
+    stream = (
+        read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
+        .filter(F.col("ts") >= cut)
+        .select("event_type", "value")
     )
     cb = run_to_table(_psi_binned(stream, b), "psi_monitor", "complete")
     cut_ref = F.lit(_PSI_CUT).cast("timestamp")
@@ -1316,32 +1239,19 @@ def q_stream_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    # r14 OPTIMIZATION: same cost law and same knobs as
-    # q_stream_stateful_counts — per-group Python overhead x batch
-    # count dominates (every user re-emits per batch). Folding the
-    # replay is sound HERE because the state fn sorts each batch's
-    # rows by (ts, event_id) before appending (the concatenated seq
-    # string is identical under any batching of the time-ordered
-    # files) and the drained answer takes the per-user max of
-    # emissions, which the docstring's monotonicity argument makes
-    # the final value under every cadence. Partition count only moves
-    # WHERE a user's state lives. Driver hash parity is the oracle
-    # (re-verified at 4 replay/partition configs incl. 1- and 2-batch
-    # folds). Measured at sf0.1, med-of-3: 12.1 s (8 batches x 8
-    # state tasks) -> 9.6 s (default replay, 32 tasks) -> 1.8 s
-    # (folded replay via the envs, 32 tasks).
-    n_files = int(os.environ.get("HLA_STREAM_SEQ_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_SEQ_MFPT", "1"))
-    state_parts = int(
-        os.environ.get("HLA_STREAM_SEQ_STATE_PARTITIONS", "32")
-    )
-    if n_files < 1 or mfpt < 1 or state_parts < 1:
-        raise ValueError(
-            "HLA_STREAM_SEQ_DROP_FILES/_MFPT/_STATE_PARTITIONS must "
-            f"be >= 1, got {n_files}/{mfpt}/{state_parts}"
-        )
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files)
-    ev = read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+    # Same cost law as q_stream_stateful_counts — per-group Python
+    # overhead x batch count dominates (every user re-emits per batch),
+    # hence the family's own 32 state partitions. Folding the replay is
+    # sound HERE because the state fn sorts each batch's rows by
+    # (ts, event_id) before appending (the concatenated seq string is
+    # identical under any batching of the time-ordered files) and the
+    # drained answer takes the per-user max of emissions, which the
+    # docstring's monotonicity argument makes the final value under
+    # every cadence. Partition count only moves WHERE a user's state
+    # lives. CI pins a folded cadence against the oracle.
+    r = replay("SEQ", files=8, mfpt=1, state_partitions=32)
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
+    ev = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
     updates = ev.groupBy("user_id").applyInPandasWithState(
         _seq_state_fn,
         outputStructType=_SEQ_OUT_SCHEMA,
@@ -1350,7 +1260,7 @@ def q_stream_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     out = run_to_table(
-        updates, "t6_stream_seq", "update", state_partitions=state_parts
+        updates, "t6_stream_seq", "update", state_partitions=r.state_partitions
     )
     return (
         out.groupBy("user_id")
@@ -1401,9 +1311,9 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain IS µs, so the fold multiplies the raw epoch (safe: 1.7e17
     < 2^63).
     """
-    n_files, mfpt = _complete_mode_replay()
-    drop = derive_drop_dir(spark, sf_dir, n_files=n_files)
-    events = read_events_stream(spark, drop, max_files_per_trigger=mfpt)
+    r = _complete_mode_replay()
+    drop = derive_drop_dir(spark, sf_dir, n_files=r.files)
+    events = read_events_stream(spark, drop, max_files_per_trigger=r.mfpt)
     k = subus_key(F.unix_micros(F.col("ts")))
     agg = (
         events.filter(F.col("event_type") == "purchase")
@@ -1463,61 +1373,28 @@ def q_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_minhash_dup_hits,
     )
 
-    # Replay-granularity knobs, the stream-stream join's pattern.
-    # Unlike the join, folding is NOT this op's lever — r14 isolation
-    # measured 92.3 s unfolded vs 96.3 s folded at 2 state partitions
-    # (per-microbatch fixed cost is a minor term here); the dominant
-    # cost is per-group Python overhead, fixed by the state-partition
-    # sizing below. The knobs exist so timing runs can still control
-    # replay shape; the drained result is replay-invariant (greedy-
-    # parity test pins three configs incl. the folded one).
-    n_files = int(os.environ.get("HLA_STREAM_DEDUP_DROP_FILES", "8"))
-    mfpt = int(os.environ.get("HLA_STREAM_DEDUP_MFPT", "1"))
-    if n_files < 1 or mfpt < 1:
-        raise ValueError(
-            f"HLA_STREAM_DEDUP_DROP_FILES/_MFPT must be >= 1, "
-            f"got {n_files}/{mfpt}"
-        )
-    drop = derive_docs_drop_dir(spark, sf_dir, n_files=n_files)
-    # r15 OPTIMIZATION: coarsen the stateful grouping from one Python
-    # call per (band, bucket) — ~80k calls per batch at sf0.1, the
-    # measured dominant cost — to one per (band, pmod(bucket, G)).
-    # The bucket -> group mapping is key-pure so the greedy answer is
+    # Folding the replay is not this op's lever (per-microbatch fixed
+    # cost is a minor term here); the drained result is
+    # replay-invariant (the greedy-parity test pins the folded config).
+    # State sizing is the OPPOSITE of the stream-stream join's: the
+    # join holds few keys with big state, while this op holds
+    # bands x docs TINY groups whose cost is per-group Python
+    # stateful-runner overhead, which parallelizes with task count —
+    # hence its own 16 state partitions (hash parity is
+    # partition-count invariant).
+    r = replay("DEDUP", files=8, mfpt=1, state_partitions=16)
+    drop = derive_docs_drop_dir(spark, sf_dir, n_files=r.files)
+    # Coarsen the stateful grouping from one Python call per
+    # (band, bucket) to one per (band, pmod(bucket, G)), G = 128. The
+    # bucket -> group mapping is key-pure, so the greedy answer is
     # unchanged (CI pins the multiset against the per-bucket path's
     # simulation at two cadences); G trades Python-call count against
     # group-rewrite granularity (stream_minhash_dup_hits docstring).
-    # Measured at sf0.1 (bench envs, med-of-3): 13.5 s per-bucket ->
-    # see OPTIMIZATION_r15.md. G=0 disables (per-bucket shape).
-    groups = int(os.environ.get("HLA_STREAM_DEDUP_GROUPS_PER_BAND", "128"))
-    if groups < 0:
-        raise ValueError(
-            f"HLA_STREAM_DEDUP_GROUPS_PER_BAND must be >= 0, got {groups}"
-        )
     hits = stream_minhash_dup_hits(
-        read_docs_stream(spark, drop, mfpt),
-        groups_per_band=groups or None,
+        read_docs_stream(spark, drop, r.mfpt), groups_per_band=128
     )
-    # State-partition sizing is the OPPOSITE of the stream-stream
-    # join's: the join holds few keys with big state (8 partitions
-    # amortize its per-task fixed cost), while this op holds
-    # bands x docs TINY groups whose cost is the per-group Python
-    # stateful-runner overhead — which parallelizes with task count.
-    # r14 isolation at sf0.1 (80k groups): 2 partitions -> 96 s,
-    # 16 -> 12.6 s, same drained result (hash parity is partition-
-    # count invariant; greedy test pins the multiset). With the r15
-    # grouped path the per-group cost amortizes inside each call, so
-    # the partition count matters far less — the knob stays for the
-    # per-bucket (G=0) shape.
-    state_parts = int(
-        os.environ.get("HLA_STREAM_DEDUP_STATE_PARTITIONS", "16")
-    )
-    if state_parts < 1:
-        raise ValueError(
-            f"HLA_STREAM_DEDUP_STATE_PARTITIONS must be >= 1, "
-            f"got {state_parts}"
-        )
     out = run_to_table(
-        hits, "t5_minhash_dedup", "append", state_partitions=state_parts
+        hits, "t5_minhash_dedup", "append", state_partitions=r.state_partitions
     )
     return (
         out.groupBy("doc_id")
@@ -1577,20 +1454,14 @@ def q_stream_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         TMP, f"stream_knn_{tag}_{spark.sparkContext.applicationId}"
     )
     corpus = scan(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    drop = derive_query_drop_dir(spark, sf_dir)
-    # r14 OPTIMIZATION: retrieval is STATELESS (module docstring), so
-    # the drain cost is pure microbatch count x foreachBatch fixed
-    # cost and the result is batch-boundary invariant — already
-    # CI-pinned at two mFPT widths (test_stream_knn_batch_boundary_
-    # invariant). The replay-fold knob (default = the parity-tested
-    # 1-file cadence) lets measurement configs collapse the 4 batches
-    # to 1: sf0.1 med-of-3 4.89 s -> 2.98 s. Same pattern as the
-    # stream-stream join's HLA_STREAM_JOIN_MFPT.
-    mfpt = int(os.environ.get("HLA_STREAM_KNN_MFPT", "1"))
-    if mfpt < 1:
-        raise ValueError(f"HLA_STREAM_KNN_MFPT must be >= 1, got {mfpt}")
+    # Retrieval is STATELESS (module docstring), so the drain cost is
+    # pure microbatch count x foreachBatch fixed cost and the result is
+    # batch-boundary invariant (CI-pinned at two mFPT widths): folding
+    # the 4-file feed is always sound.
+    r = replay("KNN", files=4, mfpt=1)
+    drop = derive_query_drop_dir(spark, sf_dir, n_files=r.files)
     result = run_stream_knn(
-        read_query_stream(spark, drop, mfpt),
+        read_query_stream(spark, drop, r.mfpt),
         corpus,
         k=10,
         name=f"t8_knn_{tag}",
@@ -1640,15 +1511,13 @@ def q_stream_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding", "label"
     )
     cents = ivf_centroids(corpus)
-    drop = derive_query_drop_dir(spark, sf_dir)
-    # Same stateless-drain fold knob as q_stream_knn (per-batch IVF
-    # routing is a pure function of the batch; multiset parity vs the
-    # batch ranker is the CI pin). sf0.1 med-of-3: 3.89 s -> 1.66 s.
-    mfpt = int(os.environ.get("HLA_STREAM_KNN_MFPT", "1"))
-    if mfpt < 1:
-        raise ValueError(f"HLA_STREAM_KNN_MFPT must be >= 1, got {mfpt}")
+    # Same stateless-drain fold as q_stream_knn (per-batch IVF routing
+    # is a pure function of the batch; multiset parity vs the batch
+    # ranker is the CI pin).
+    r = replay("KNN", files=4, mfpt=1)
+    drop = derive_query_drop_dir(spark, sf_dir, n_files=r.files)
     result = run_stream_knn(
-        read_query_stream(spark, drop, mfpt),
+        read_query_stream(spark, drop, r.mfpt),
         corpus,
         k=10,
         name=f"t8_knn_ivf_{tag}",

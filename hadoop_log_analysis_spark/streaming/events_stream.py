@@ -23,10 +23,13 @@ from __future__ import annotations
 
 import os
 import shutil
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 TMP = os.path.join(_REPO, ".tmp")
@@ -195,31 +198,173 @@ def read_events_stream(
 
 
 def ckpt_path(name: str, app_id: str) -> str:
-    """The checkpoint directory ``run_to_table`` /
-    ``run_foreach_batch_to_parquet`` use for a given sink table name
+    """The checkpoint directory ``drain`` uses for a stream ``name``
     and Spark application id. Shared so measurement tooling
     (scripts/stream_state_skew.py) derives the SAME path instead of
     hard-coding the convention — a rename there must break loudly,
-    not silently profile an empty directory (ADVICE r12)."""
+    not silently profile an empty directory."""
     return os.path.join(TMP, f"stream_ckpt_{name}_{app_id}")
+
+
+# Every replay knob the streaming queries read, by full name. A family
+# resolves only the names listed here; a value it has no knob for is
+# the constant its query passes. HLA_STREAM_STATE_PARTITIONS is the
+# shared state-task count for drains whose family does not size it.
+REPLAY_ENV = (
+    "HLA_STREAM_COMPLETE_DROP_FILES",
+    "HLA_STREAM_COMPLETE_MFPT",
+    "HLA_STREAM_T5_DEDUP_DROP_FILES",
+    "HLA_STREAM_T5_DEDUP_MFPT",
+    "HLA_STREAM_COUNTS_DROP_FILES",
+    "HLA_STREAM_COUNTS_MFPT",
+    "HLA_STREAM_COUNTS_STATE_PARTITIONS",
+    "HLA_STREAM_SEQ_DROP_FILES",
+    "HLA_STREAM_SEQ_MFPT",
+    "HLA_STREAM_SEQ_STATE_PARTITIONS",
+    "HLA_STREAM_JOIN_DROP_FILES",
+    "HLA_STREAM_JOIN_MFPT",
+    "HLA_STREAM_HH_DROP_FILES",
+    "HLA_STREAM_HH_MFPT",
+    "HLA_STREAM_PSI_DROP_FILES",
+    "HLA_STREAM_DEDUP_DROP_FILES",
+    "HLA_STREAM_DEDUP_MFPT",
+    "HLA_STREAM_KNN_MFPT",
+    "HLA_STREAM_STATE_PARTITIONS",
+)
+
+
+def _env_int(name: str, default: int) -> int:
+    """The one reader of HLA_STREAM_* variables: ``default`` when
+    unset, else a positive int. A nonsensical value fails loudly
+    instead of silently hanging, zeroing or emptying a drain."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        val = int(raw)
+    except ValueError:
+        val = 0  # not an integer: rejected below with the same message
+    if val < 1:
+        raise ValueError(f"{name} must be an integer >= 1, got {raw!r}")
+    return val
+
+
+@dataclass(frozen=True)
+class Replay:
+    """How a query replays its drop directory: ``files`` drop files,
+    ``mfpt`` of them per microbatch (maxFilesPerTrigger), and the
+    ``state_partitions`` its drain pins."""
+
+    files: int
+    mfpt: int
+    state_partitions: int
+
+
+def replay(
+    family: str | None = None,
+    files: int = 8,
+    mfpt: int = 1,
+    state_partitions: int | None = None,
+) -> Replay:
+    """Resolve ``family``'s replay: each value is its
+    ``HLA_STREAM_<family>_{DROP_FILES,MFPT,STATE_PARTITIONS}`` override
+    when that name is in REPLAY_ENV, else the query's default. A family
+    that sizes its own state passes ``state_partitions``; otherwise the
+    drain pins HLA_STREAM_STATE_PARTITIONS, else 8."""
+
+    def knob(suffix: str, default: int) -> int:
+        name = f"HLA_STREAM_{family}_{suffix}"
+        return _env_int(name, default) if name in REPLAY_ENV else default
+
+    if state_partitions is None:
+        state_partitions = _env_int("HLA_STREAM_STATE_PARTITIONS", 8)
+    else:
+        state_partitions = knob("STATE_PARTITIONS", state_partitions)
+    return Replay(
+        files=knob("DROP_FILES", files),
+        mfpt=knob("MFPT", mfpt),
+        state_partitions=state_partitions,
+    )
 
 
 def _drain_timeout(default_sec: int) -> int:
     """HLA_STREAM_DRAIN_TIMEOUT_SEC raises the drain deadline on slow
-    or noisy hosts (r12: the heaviest skew-probe drain sits near 300 s
-    and crossed it under host-neighbor jitter — a timeout is a HARNESS
-    bound, not part of any query's semantics). Validated like
-    HLA_BFS_CHECKPOINT_EVERY_K: a nonsensical value must fail loudly,
-    not silently hang or zero out."""
-    env_to = os.environ.get("HLA_STREAM_DRAIN_TIMEOUT_SEC")
-    if env_to is None:
-        return default_sec
-    val = int(env_to)
-    if val < 1:
-        raise ValueError(
-            f"HLA_STREAM_DRAIN_TIMEOUT_SEC must be >= 1, got {env_to}"
-        )
-    return val
+    or noisy hosts: the heaviest skew-probe drain sits near 300 s and
+    can cross it under host-neighbor jitter. A timeout is a HARNESS
+    bound, not part of any query's semantics."""
+    return _env_int("HLA_STREAM_DRAIN_TIMEOUT_SEC", default_sec)
+
+
+def drain(
+    sdf: DataFrame,
+    name: str,
+    output_mode: str = "append",
+    foreach_batch: Callable[[DataFrame, int], None] | None = None,
+    state_partitions: int | None = None,
+    timeout_sec: int = 300,
+    resume: bool = False,
+) -> StreamingQuery:
+    """Run a streaming DataFrame to completion: the one place a stream
+    is started. Returns the terminated query (its ``recentProgress``
+    holds the per-microbatch progress).
+
+    ``trigger(availableNow=True)`` processes everything currently in
+    the source as real incremental microbatches (bounded by the
+    source's maxFilesPerTrigger), then stops — the deterministic way
+    to verify a streaming pipeline.
+
+    Sink: the memory table ``name``, or ``foreach_batch(batch_df,
+    batch_id)`` per microbatch when given. foreachBatch delivery is
+    AT-LEAST-once (a mid-batch failure replays the batch), so a
+    foreachBatch sink keys its output on batch_id and overwrites,
+    making replays idempotent.
+
+    Checkpoint: ``ckpt_path(name, app)``, cleared first unless
+    ``resume`` (a stale checkpoint would no-op a re-run). The
+    application id keeps concurrent sessions from racing one rmtree
+    against another's in-flight batch-0 state write.
+
+    State partitions: ``spark.sql.shuffle.partitions`` is pinned for
+    the drain and restored afterwards. It sizes the state-store TASK
+    COUNT, which a fresh checkpoint fixes at batch 0; the
+    per-microbatch cost of these bounded replays is state tasks, not
+    data, so the count is sized to the (tiny) state volume exactly as
+    a production job would. ``None`` resolves HLA_STREAM_STATE_PARTITIONS,
+    else 8. Results are partition-count invariant (hash parity is the
+    oracle on every streaming query).
+
+    Timeout: ``_drain_timeout(timeout_sec)``; on expiry the query is
+    stopped and RuntimeError raised — a partial sink is never returned.
+    """
+    if state_partitions is None:
+        state_partitions = replay().state_partitions
+    timeout_sec = _drain_timeout(timeout_sec)
+    spark = sdf.sparkSession
+    ckpt = ckpt_path(name, spark.sparkContext.applicationId)
+    if not resume:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    writer = (
+        sdf.writeStream.queryName(name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+    )
+    if foreach_batch is None:
+        writer = writer.format("memory")
+    else:
+        writer = writer.foreachBatch(foreach_batch)
+    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    try:
+        q = writer.start()
+        if not q.awaitTermination(timeout_sec):
+            q.stop()
+            raise RuntimeError(
+                f"stream {name!r} did not drain within {timeout_sec}s"
+            )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    return q
 
 
 def run_to_table(
@@ -229,102 +374,13 @@ def run_to_table(
     timeout_sec: int = 300,
     state_partitions: int | None = None,
 ) -> DataFrame:
-    """Drain a streaming DataFrame to completion; return the result.
-
-    ``trigger(availableNow=True)`` processes everything currently in
-    the drop dir as real incremental microbatches (bounded by the
-    source's maxFilesPerTrigger) then stops — the deterministic way to
-    verify a streaming pipeline. Memory sink; checkpoint under .tmp,
-    cleared per run (stale checkpoints no-op re-runs).
-
-    ``state_partitions`` sizes the state-store TASK COUNT to the
-    (tiny) state volume for the duration of the drain — exactly the
-    sizing a production job makes (BASELINE.md r5 addendum: the
-    per-microbatch cost of these bounded replays is state tasks, not
-    data; 32 -> 8 partitions took the stream-stream join 22.8 -> 7.5 s
-    and a bare 200-partition driver session pays 25x that). The
-    partition count is pinned at the checkpoint's batch 0 — the
-    checkpoint is fresh per run, so the conf applies — and is
-    restored right after the drain; results are partition-count
-    invariant (hash-parity is the oracle on every streaming query).
-    """
-    # HLA_STREAM_STATE_PARTITIONS lets the bench size state tasks to
-    # its replay without touching query code; parity tests keep the
-    # default (results are partition-count invariant — hash-parity is
-    # the oracle on every streaming query).
-    if state_partitions is None:
-        state_partitions = int(
-            os.environ.get("HLA_STREAM_STATE_PARTITIONS", "8")
-        )
-    timeout_sec = _drain_timeout(timeout_sec)
-    spark = sdf.sparkSession
-    # Session-unique checkpoint (r6: a concurrent pytest + sweep pair
-    # raced rmtree against an in-flight batch-0 state write and died
-    # with STATE_STORE_CHECKPOINT_LOCATION_NOT_EMPTY — same fix class
-    # as q_schema_evolution_read's derived dir).
-    app = spark.sparkContext.applicationId
-    ckpt = ckpt_path(name, app)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise RuntimeError(
-                f"stream {name!r} did not drain within {timeout_sec}s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(name)
-
-
-def run_foreach_batch_to_parquet(
-    sdf: DataFrame, name: str, out_dir: str, timeout_sec: int = 300
-) -> None:
-    """T7: drain via foreachBatch -> partitioned parquet sink.
-
-    foreachBatch is the production fan-out sink: each microbatch is a
-    batch DataFrame the callback writes with the full batch writer
-    (partitioning, dynamic overwrite, multiple sinks). Delivery is
-    AT-LEAST-once — a mid-batch failure replays the batch — so the
-    sink keys each batch's files on batch_id and overwrites, making
-    replays idempotent (effectively-once end to end).
-    """
-    timeout_sec = _drain_timeout(timeout_sec)
-    spark = sdf.sparkSession
-    app = spark.sparkContext.applicationId
-    ckpt = ckpt_path(name, app)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(out_dir, ignore_errors=True)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").partitionBy("event_type").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-
-    # same state-partition sizing rationale as run_to_table
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            sdf.writeStream.foreachBatch(write_batch)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise RuntimeError(
-                f"stream {name!r} did not drain within {timeout_sec}s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    """Drain ``sdf`` into the memory table ``name`` (see ``drain``)
+    and return that table."""
+    drain(
+        sdf,
+        name,
+        output_mode,
+        state_partitions=state_partitions,
+        timeout_sec=timeout_sec,
+    )
+    return sdf.sparkSession.table(name)

@@ -47,9 +47,8 @@ from pyspark.sql import types as T
 
 from hadoop_log_analysis_spark.streaming.events_stream import (
     TMP,
-    _drain_timeout,
     _tag,
-    ckpt_path,
+    drain,
     stamp_replay_order,
 )
 
@@ -127,12 +126,11 @@ def run_stream_knn(
 ) -> DataFrame:
     """Drain a query stream through per-batch top-k retrieval.
 
-    foreachBatch skeleton per events_stream.run_foreach_batch_to_parquet
-    (same checkpoint / availableNow / idempotent batch_id-overwrite
-    discipline); each microbatch of queries goes through ``ranker`` —
-    any batch function (q_id, qvec) -> (q_id, vec_id, sim, rn) — and
-    only the k rows per query are written. The default ranker is the
-    exact broadcast-corpus scan (operators.similarity.exact_topk_multi);
+    A foreachBatch ``drain`` with an idempotent batch_id-overwrite
+    sink; each microbatch of queries goes through ``ranker`` — any
+    batch function (q_id, qvec) -> (q_id, vec_id, sim, rn) — and only
+    the k rows per query are written. The default ranker is the exact
+    broadcast-corpus scan (operators.similarity.exact_topk_multi);
     pass an ``ivf_topk_multi`` closure for the corpus-past-broadcast
     route. Returns the read-back result for the whole drained feed.
     """
@@ -142,11 +140,6 @@ def run_stream_knn(
 
     if ranker is None:
         ranker = lambda batch_df: exact_topk_multi(batch_df, corpus, k=k)  # noqa: E731
-    timeout_sec = _drain_timeout(timeout_sec)
-    spark = queries_stream.sparkSession
-    app = spark.sparkContext.applicationId
-    ckpt = ckpt_path(name, app)
-    shutil.rmtree(ckpt, ignore_errors=True)
     shutil.rmtree(out_dir, ignore_errors=True)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -158,24 +151,9 @@ def run_stream_knn(
             .parquet(os.path.join(out_dir, f"batch_id={batch_id}"))
         )
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            queries_stream.writeStream.foreachBatch(write_batch)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise RuntimeError(
-                f"stream {name!r} did not drain within {timeout_sec}s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-
+    drain(
+        queries_stream, name, foreach_batch=write_batch, timeout_sec=timeout_sec
+    )
     sink_schema = T.StructType(
         [
             T.StructField("q_id", T.LongType()),
@@ -185,4 +163,5 @@ def run_stream_knn(
             T.StructField("batch_id", T.LongType()),
         ]
     )
+    spark = queries_stream.sparkSession
     return spark.read.schema(sink_schema).parquet(out_dir).drop("batch_id")

@@ -3,9 +3,13 @@ for ANY data, checked on the fixtures."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from hadoop_log_analysis_spark.sources.catalog import scan
+from hadoop_log_analysis_spark.streaming.events_stream import REPLAY_ENV, replay
 from tests.conftest import SF001
 
 
@@ -2882,6 +2886,80 @@ def test_stream_bucket_seconds_env_validated(monkeypatch):
         monkeypatch.setenv("HLA_STREAM_BUCKET_SECONDS", bad)
         with _pytest.raises(ValueError):
             bucket_seconds_env(3600)
+
+
+@pytest.mark.parametrize("bad", ["0", "-1", "abc"])
+@pytest.mark.parametrize("name", REPLAY_ENV)
+def test_replay_env_rejects_bad_values(monkeypatch, name, bad):
+    """Every replay knob is validated in one place: a non-positive or
+    non-integer value raises ValueError naming the variable, whichever
+    family reads it."""
+    for other in REPLAY_ENV:
+        monkeypatch.delenv(other, raising=False)
+    monkeypatch.setenv(name, bad)
+    m = re.fullmatch(r"HLA_STREAM_(\w+?)_(DROP_FILES|MFPT|STATE_PARTITIONS)", name)
+    family = m.group(1) if m else None  # None: the shared state knob
+    with pytest.raises(ValueError, match=name):
+        replay(family, state_partitions=None if family is None else 8)
+
+
+def test_streams_start_and_env_reads_live_in_one_module():
+    """Guard: ``.writeStream`` appears only in events_stream.drain, and
+    every HLA_STREAM_* environment read goes through
+    events_stream._env_int, called only by the replay resolver, the
+    drain timeout and the bucket-width knob — so per-query stream
+    start/await/stop copies and per-query env parsing cannot grow
+    back. Other env reads must name a literal non-stream variable."""
+    import ast
+    import pathlib
+
+    import hadoop_log_analysis_spark
+
+    root = pathlib.Path(hadoop_log_analysis_spark.__file__).parent
+    write_streams, bad_env_reads, env_int_callers = [], [], set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+
+        def owner(node):  # the enclosing top-level function's name
+            name = None
+            while node in parent:
+                node = parent[node]
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    name = node.name
+            return name
+
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr == "writeStream":
+                write_streams.append((rel, owner(node)))
+            if isinstance(node, ast.Call) and getattr(
+                node.func, "id", getattr(node.func, "attr", None)
+            ) == "_env_int":
+                env_int_callers.add(owner(node))
+            if not (
+                isinstance(node, ast.Attribute)
+                and node.attr in ("environ", "getenv")
+                and getattr(node.value, "id", None) == "os"
+            ):
+                continue
+            use = parent[node]
+            if isinstance(use, ast.Attribute) and use.attr == "get":
+                use = parent[use]
+            if isinstance(use, ast.Call) and use.args:
+                key = use.args[0]
+            elif isinstance(use, ast.Subscript):
+                key = use.slice
+            else:
+                key = None
+            literal = getattr(key, "value", None)
+            if (rel, owner(node)) != ("streaming/events_stream.py", "_env_int") and (
+                not isinstance(literal, str) or literal.startswith("HLA_STREAM_")
+            ):
+                bad_env_reads.append((rel, owner(node), literal))
+    assert write_streams == [("streaming/events_stream.py", "drain")]
+    assert not bad_env_reads, bad_env_reads
+    assert env_int_callers == {"replay", "_drain_timeout", "bucket_seconds_env"}
 
 
 def test_parse_app_log_split_extraction_matches_regex_groups(spark):

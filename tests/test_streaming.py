@@ -513,3 +513,35 @@ def test_stream_heavy_hitters_parity_at_folded_replay(spark, monkeypatch):
     monkeypatch.setenv("HLA_STREAM_HH_DROP_FILES", "0")
     with pytest.raises(ValueError):
         spec.fn(spark, SF001)
+
+
+def test_drain_failure_propagates_and_restores_session(spark):
+    """events_stream.drain's failure path: an error raised inside a
+    foreachBatch function must reach the caller, leave no active
+    stream behind and restore spark.sql.shuffle.partitions — while the
+    drain itself ran under the pinned state-partition count."""
+    from hadoop_log_analysis_spark.streaming.events_stream import (
+        derive_drop_dir,
+        drain,
+        read_events_stream,
+    )
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    pinned = str(int(before) + 3)
+    seen = []
+
+    def fail(batch_df, batch_id):
+        seen.append(batch_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        raise RuntimeError("sink exploded on purpose")
+
+    drop = derive_drop_dir(spark, SF0001)
+    with pytest.raises(Exception, match="sink exploded on purpose"):
+        drain(
+            read_events_stream(spark, drop),
+            "test_drain_failure",
+            foreach_batch=fail,
+            state_partitions=int(pinned),
+        )
+    assert seen == [pinned]
+    assert spark.streams.active == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
